@@ -50,12 +50,16 @@ WAXMAN = dict(beta=0.6, r0=150.0, seed=42, p_min=1e-3)
 # — so repeating it for every SQL query in a session is waste; every query
 # still computes from the parquet files.  A different sf_dir in the same
 # session re-registers, so the views always point at the caller's dir.
+# The memo is only a hint: its key can be reused by a later session and a
+# view can be dropped, so registration is skipped only while the catalog
+# still holds the views.
 _REGISTERED_VIEWS: dict[tuple[str, int], str] = {}
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     key = (spark.sparkContext.applicationId, id(spark))
-    if _REGISTERED_VIEWS.get(key) == sf_dir:
+    if (_REGISTERED_VIEWS.get(key) == sf_dir
+            and all(spark.catalog.tableExists(t) for t in TABLES)):
         return
     for t in TABLES:
         spark.read.parquet(f"{sf_dir}/{t}.parquet").createOrReplaceTempView(t)

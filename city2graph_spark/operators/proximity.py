@@ -3,10 +3,16 @@
 Reimplements the semantics of ``/root/reference/city2graph/proximity.py``
 (knn_graph 771-887, fixed_radius_graph 1303-1437, gabriel_graph 985-1081,
 relative_neighborhood_graph 1084-1184, waxman_graph 1440-1567) over
-``(node_id, x, y)`` DataFrames.  Every operator here is pure DataFrame
-column arithmetic — cell equi-joins + window ranks + anti-joins — so the
-whole plan stays inside whole-stage codegen; there is **no Python UDF in
-any hot path**.
+``(node_id, x, y)`` DataFrames.  Plans are cell equi-joins, window ranks
+and anti-joins; the dense per-block work runs in pandas-UDF kernels
+(``applyInPandas``/``mapInPandas``): kNN phase 1
+(:func:`_local_topk_kernel`), the Gabriel/RNG empty-region test
+(:func:`_empty_graph_kernel`) and the distributed Delaunay tiles and
+hull.  Everything else stays in the JVM.
+
+kNN is one engine, :func:`_knn_join` — a kNN join R⋈S.  ``knn_graph`` is
+its self mode (R = S, self excluded by id) and
+``bipartite.knn_graph_bipartite`` its bipartite mode.
 
 Scale notes (10^12 rows):
 
@@ -64,9 +70,16 @@ def estimate_knn_cell(n: int, k: int, domain: float = 5000.0,
     return max(b, domain / (1 << 16))
 
 
-def _local_topk_kernel(k: int, metric: str, block_size: float):
-    """Build the cogrouped-applyInPandas kernel: per superblock, exact
-    top-k of every probe against the block's 3×3-halo candidate set.
+def _local_topk_kernel(k: int, metric: str, block_size: float,
+                       self_join: bool):
+    """Build the grouped-applyInPandas kernel: per superblock, exact top-k
+    of every probe against the block's 3×3-halo candidate set.
+
+    ``self_join`` is the one difference between the two kNN-join modes:
+    self mode scans every row as a candidate and excludes the probe's own
+    id (``kk = min(k, nc-1)``); bipartite mode scans only the non-probe
+    rows and excludes nothing (``kk = min(k, nc)``) — the two layers may
+    reuse ids, so nothing is ever matched by id across them.
 
     All arithmetic is numpy float64 with the same expression tree as the
     column/oracle path (dx·dx + dy·dy → sqrt), so distances are bit-identical
@@ -83,46 +96,47 @@ def _local_topk_kernel(k: int, metric: str, block_size: float):
              "px": pd.Series(dtype="float64"),
              "py": pd.Series(dtype="float64")}
 
+    def sentinel(pid, px, py):
+        # candidate-less probes: an infinite weight routes them to the
+        # residual fallback (dst is a filler, never read)
+        n = len(pid)
+        return pd.DataFrame({"src": pid, "dst": np.full(n, -1),
+                             "weight": np.full(n, np.inf),
+                             "cert": np.zeros(n, dtype=bool),
+                             "px": px, "py": py})
+
     def kernel(rows: "pd.DataFrame") -> "pd.DataFrame":
-        # One row per (point, covered block): the copy whose home cell equals
-        # the group's query cell is a probe; every row is a candidate.
+        # The ``_probe`` flag marks the rows probed in this group: a home-
+        # cell point, in exactly ONE salt group of a salted hot block.
         # (Single-sided grouping — Spark 4.1's cogroup prunes the right
         # side's columns under generator inputs, so cogroup is avoided.)
         # The certificate is computed HERE (kth distance strictly inside the
         # exact per-point margin to the scanned 3×3 region boundary) so the
         # driver-side plan needs no full-size anchor join; probe coords are
         # emitted only on uncertified rows.
-        # Salted hot blocks carry an explicit probe flag (the home copy is a
-        # probe in exactly ONE salt group but a candidate in all of them).
-        if "_probe" in rows.columns:
-            home = rows["_probe"].to_numpy(bool)
-        else:
-            home = (rows["cell"] == rows["qcell"]).to_numpy()
+        home = rows["_probe"].to_numpy(bool)
         if not home.any():
             return pd.DataFrame(empty)
-        order = np.argsort(rows["node_id"].to_numpy(), kind="stable")
-        cid = rows["node_id"].to_numpy()[order]
-        cx = rows["x"].to_numpy()[order]
-        cy = rows["y"].to_numpy()[order]
+        cand = rows if self_join else rows[~home]
+        order = np.argsort(cand["node_id"].to_numpy(), kind="stable")
+        cid = cand["node_id"].to_numpy()[order]
+        cx = cand["x"].to_numpy()[order]
+        cy = cand["y"].to_numpy()[order]
         pid = rows["node_id"].to_numpy()[home]
         px = rows["x"].to_numpy()[home]
         py = rows["y"].to_numpy()[home]
         nc = len(cid)
-        kk = min(k, nc - 1)
+        kk = min(k, nc - 1) if self_join else min(k, nc)
+        if kk <= 0:
+            return sentinel(pid, px, py)
         bx = np.floor(px / B)
         by = np.floor(py / B)
         margin = np.minimum.reduce([px - (bx - 1) * B, (bx + 2) * B - px,
                                     py - (by - 1) * B, (by + 2) * B - py])
-        if kk <= 0:
-            # lone probes: sentinel rows route them to the residual fallback
-            return pd.DataFrame({"src": pid, "dst": np.full(len(pid), -1),
-                                 "weight": np.full(len(pid), np.inf),
-                                 "cert": np.zeros(len(pid), dtype=bool),
-                                 "px": px, "py": py})
         frames = []
         # chunk probes so chunk×candidates stays bounded (skewed blocks)
         chunk = max(1, int(4_000_000 / nc))
-        m = min(kk + 8, nc)  # argpartition margin for boundary ties
+        m = min(kk + 8, nc)  # partial-sort margin for boundary ties
         for s in range(0, len(pid), chunk):
             cpid, cpx, cpy = pid[s:s + chunk], px[s:s + chunk], py[s:s + chunk]
             cmargin = margin[s:s + chunk]
@@ -133,11 +147,12 @@ def _local_topk_kernel(k: int, metric: str, block_size: float):
             else:
                 # select on d² (monotone), sqrt only the m survivors per
                 # probe — cuts the full-matrix sqrt from the hot loop.
-                # Boundary ties at the argpartition cut behave exactly as
+                # Boundary ties at the partition cut behave exactly as
                 # before (arbitrary there too); the (weight, id) tie order
                 # below runs on the true sqrt weights either way.
                 dist = dx * dx + dy * dy
-            dist[cpid[:, None] == cid[None, :]] = np.inf  # exclude self
+            if self_join:
+                dist[cpid[:, None] == cid[None, :]] = np.inf  # exclude self
             if m < nc:
                 part = np.argpartition(dist, m - 1, axis=1)[:, :m]
             else:
@@ -169,11 +184,7 @@ def _local_topk_kernel(k: int, metric: str, block_size: float):
             # probes with zero finite candidates still need sentinel rows
             lone = ~found.any(axis=1)
             if lone.any():
-                frames.append(pd.DataFrame({
-                    "src": cpid[lone], "dst": np.full(lone.sum(), -1),
-                    "weight": np.full(lone.sum(), np.inf),
-                    "cert": np.zeros(lone.sum(), dtype=bool),
-                    "px": cpx[lone], "py": cpy[lone]}))
+                frames.append(sentinel(cpid[lone], cpx[lone], cpy[lone]))
         return pd.concat(frames) if frames else pd.DataFrame(empty)
 
     return kernel
@@ -201,57 +212,51 @@ def _apply_duplicate_edges(edges: DataFrame, duplicate_edges: bool, *,
     return symmetrize_edges(edges, src=src, dst=dst)
 
 
-def knn_graph(points: DataFrame, k: int, *, cell_size: float,
-              metric: str = "euclidean", directed: bool = False,
-              salt_target: int = 100_000,
-              duplicate_edges: bool = False) -> DataFrame:
-    """Exact k-nearest-neighbor graph over (node_id, x, y).
-
-    Reference semantics (proximity.py:875-884): per node, k nearest by the
-    chosen metric, self excluded; undirected output canonicalises (u,v) to
-    unordered pairs and dedupes.  Ties break by (distance, dst) — the same
-    deterministic order the oracle SQL uses.
+def _knn_join(probe_pts: DataFrame, cand_pts: DataFrame, k: int, *,
+              self_join: bool, cell_size: float, metric: str,
+              salt_target: int = 100_000) -> DataFrame:
+    """The one exact kNN join R⋈S: every probe point → its k nearest
+    candidate points, as directed (src, dst, weight) rows.  Self-kNN is the
+    case R = S (``self_join=True``: the caller passes the same frame twice,
+    and self is excluded by id); bipartite kNN keeps the layers apart and
+    excludes nothing.
 
     Strategy: ``cell_size`` is the *superblock* size.  Phase 1 computes each
     block's probes against its 3×3-halo candidates with a vectorized numpy
-    kernel inside a cogrouped ``applyInPandas`` (pairs never materialise in
+    kernel inside a grouped ``applyInPandas`` (pairs never materialise in
     the shuffle — only k edges per probe come back).  Phase 2 re-probes the
     per-point certificate failures with a variable-radius cell join; a
     residual broadcast fallback handles probes with fewer than k candidates
     anywhere in the halo.  Exact at every phase.
-
-    Returns (src, dst, weight).
     """
-    if duplicate_edges and directed:
-        _apply_duplicate_edges(None, True, directed=True)  # raises
     B = float(cell_size)
-    pts = with_cell(points, cell_size=B)
-    build = pts.select(
+    probes = with_cell(probe_pts, cell_size=B)
+    cpts = probes if self_join else with_cell(cand_pts, cell_size=B)
+    build = cpts.select(
         F.col("node_id").alias("dst"), F.col("x").alias("bx"),
         F.col("y").alias("by"), F.col("cell").alias("bcell"))
 
     def rank_topk(cand: DataFrame) -> DataFrame:
-        cand = cand.where(F.col("src") != F.col("dst"))
+        if self_join:
+            cand = cand.where(F.col("src") != F.col("dst"))
         w = Window.partitionBy("src").orderBy(F.col("weight").asc(), F.col("dst").asc())
         return (cand.withColumn("_rn", F.row_number().over(w))
                     .where(F.col("_rn") <= k).drop("_rn"))
 
     # ---- phase 1: per-superblock local kNN (grouped pandas kernel) -----
-    # Every point is exploded to the 9 blocks it can serve as a candidate
-    # for; the home-cell copy doubles as the probe.  The kernel computes
-    # the exactness certificate per probe (kth < margin-to-scanned-region)
-    # and emits sentinel dst=-1 rows for candidate-less probes, so the
-    # driver-side plan never joins against the full point set.  Node ids
-    # must be non-negative (the derived/doc ids always are).
-    cands = explode_ring(pts, ring=1, cx="cell_cx", cy="cell_cy", out="qcell") \
-        .select("node_id", "x", "y", "cell", "qcell")
-    # urban-core skew guard: a superblock with more than ``salt_target``
-    # home points splits into ⌈count/salt_target⌉ salted sub-tasks — probes
+    # Every candidate is exploded to the 9 blocks it can serve; a probe
+    # joins its home block only (in self mode the home-cell copy doubles as
+    # the probe).  The kernel computes the exactness certificate per probe
+    # (kth < margin-to-scanned-region) and emits infinite-weight sentinel
+    # rows for candidate-less probes, so the driver-side plan never joins
+    # against the full point set.
+    # Urban-core skew guard: a superblock with more than ``salt_target``
+    # home probes splits into ⌈count/salt_target⌉ salted sub-tasks — probes
     # hash-partitioned across salts, candidates replicated to every salt, a
-    # per-row flag marks the one group where the home copy probes.  Result
+    # per-row flag marks the one group where a home copy probes.  Result
     # identical, task size bounded.  (AQE cannot split a single pandas
     # group; this does.)
-    hot = (pts.groupBy("cell").count()
+    hot = (probes.groupBy("cell").count()
            .where(F.col("count") > salt_target)
            .select(F.col("cell").alias("qcell"),
                    F.ceil(F.col("count") / salt_target).cast("int")
@@ -262,28 +267,44 @@ def knn_graph(points: DataFrame, k: int, *, cell_size: float,
     # union split measured 1.58 → 1.88 s on a quiet host — the per-row
     # hash+Generate below is cheaper than a second broadcast probe pass
     # in the regime the bench runs.  See OPTIMIZATION_r07.md.)
-    cands = (cands.join(F.broadcast(hot), "qcell", "left")
-             .withColumn("_nsalt", F.coalesce("_nsalt", F.lit(1)))
-             .withColumn("_psalt", F.pmod(F.xxhash64("node_id"),
-                                          F.col("_nsalt")))
-             .withColumn("_salt", F.explode(F.sequence(
-                 F.lit(0), F.col("_nsalt") - 1)))
-             .withColumn("_probe", (F.col("cell") == F.col("qcell"))
-                         & (F.col("_salt") == F.col("_psalt")))
-             .select("node_id", "x", "y", "cell", "qcell", "_salt", "_probe"))
+
+    def salted(rows: DataFrame, probe) -> DataFrame:
+        return (rows.join(F.broadcast(hot), "qcell", "left")
+                .withColumn("_nsalt", F.coalesce("_nsalt", F.lit(1)))
+                .withColumn("_psalt", F.pmod(F.xxhash64("node_id"),
+                                             F.col("_nsalt")))
+                .withColumn("_salt", F.explode(F.sequence(
+                    F.lit(0), F.col("_nsalt") - 1)))
+                .withColumn("_probe", probe)
+                .select("node_id", "x", "y", "cell", "qcell", "_salt",
+                        "_probe"))
+
+    is_probe = ((F.col("cell") == F.col("qcell"))
+                & (F.col("_salt") == F.col("_psalt")))
+    ring = explode_ring(cpts, ring=1, cx="cell_cx", cy="cell_cy", out="qcell") \
+        .select("node_id", "x", "y", "cell", "qcell")
+    if self_join:
+        rows = salted(ring, is_probe)
+    else:
+        home = probes.select("node_id", "x", "y", "cell",
+                             F.col("cell").alias("qcell"))
+        rows = salted(ring, F.lit(False)).unionByName(
+            salted(home, is_probe).where(F.col("_probe")))
     top1 = _persist(
-        cands.groupBy("qcell", "_salt")
-        .applyInPandas(_local_topk_kernel(k, metric, B),
+        rows.groupBy("qcell", "_salt")
+        .applyInPandas(_local_topk_kernel(k, metric, B, self_join),
                        "src long, dst long, weight double, cert boolean, "
                        "px double, py double"))
     top_certified = top1.where(F.col("cert"))
 
-    # Only the (rare) uncertified probes need driver-side stats.
+    # Only the (rare) uncertified probes need driver-side stats; sentinel
+    # rows are the infinite-weight ones (ids may take any value).
+    found = F.col("weight") < F.lit(float("inf"))
     stats1 = _persist(
         top1.where(~F.col("cert"))
         .groupBy("src")
-        .agg(F.max(F.when(F.col("dst") >= 0, F.col("weight"))).alias("_kth"),
-             F.sum(F.when(F.col("dst") >= 0, 1).otherwise(0)).alias("_cnt"),
+        .agg(F.max(F.when(found, F.col("weight"))).alias("_kth"),
+             F.sum(F.when(found, 1).otherwise(0)).alias("_cnt"),
              F.first("px").alias("px"), F.first("py").alias("py")))
 
     # ---- phase 2: boundary exchange for uncertified probes -----------
@@ -308,10 +329,29 @@ def knn_graph(points: DataFrame, k: int, *, cell_size: float,
                                          F.col("py") - F.col("by"))))
     top3 = rank_topk(cand3.select("src", "dst", "weight"))
 
-    edges = (top_certified.select("src", "dst", "weight")
-             .unionByName(top2.select("src", "dst", "weight"))
-             .unionByName(top3.select("src", "dst", "weight")))
+    return (top_certified.select("src", "dst", "weight")
+            .unionByName(top2.select("src", "dst", "weight"))
+            .unionByName(top3.select("src", "dst", "weight")))
 
+
+def knn_graph(points: DataFrame, k: int, *, cell_size: float,
+              metric: str = "euclidean", directed: bool = False,
+              salt_target: int = 100_000,
+              duplicate_edges: bool = False) -> DataFrame:
+    """Exact k-nearest-neighbor graph over (node_id, x, y).
+
+    Reference semantics (proximity.py:875-884): per node, k nearest by the
+    chosen metric, self excluded; undirected output canonicalises (u,v) to
+    unordered pairs and dedupes.  Ties break by (distance, dst) — the same
+    deterministic order the oracle SQL uses.  Runs the self mode of
+    :func:`_knn_join`; ``cell_size`` is its superblock size.
+
+    Returns (src, dst, weight).
+    """
+    if duplicate_edges and directed:
+        _apply_duplicate_edges(None, True, directed=True)  # raises
+    edges = _knn_join(points, points, k, self_join=True, cell_size=cell_size,
+                      metric=metric, salt_target=salt_target)
     if directed:
         return edges
     # undirected: canonical unordered pair, dedupe (proximity.py:879-884 via

@@ -231,10 +231,12 @@ def minimum_spanning_forest(edges: DataFrame, *, src: str = "u",
 
     Returns the forest edges (u, v, weight) — the MST when connected.
     """
+    # duplicated (u, v) keep their lightest copy — an explicit min, so a
+    # recompute after cache loss can never pick a different weight
     e0 = edges.select(F.least(src, dst).alias("u"),
                       F.greatest(src, dst).alias("v"),
                       F.col(weight).alias("weight")) \
-        .dropDuplicates(["u", "v"]).persist()
+        .groupBy("u", "v").agg(F.min("weight").alias("weight")).persist()
     e = e0
     nodes = e.select(F.col("u").alias("node")) \
         .unionByName(e.select(F.col("v").alias("node"))).dropDuplicates()

@@ -74,9 +74,8 @@ def minhash_signatures(docs: DataFrame, *, n_hashes: int = 8,
     strong mixer), and per-doc minima come from one
     ``np.minimum.reduceat`` — min over the window multiset equals min over
     the shingle SET, so deduplication is unnecessary.  Output rows = one
-    per doc; the downstream band join is unchanged.  The groupBy-aggregate
-    twin survives as :func:`minhash_signatures_agg` (plan comparison), the
-    md5 twin as the gate oracle."""
+    per doc; the downstream band join is unchanged.  The md5 twin survives
+    as the gate oracle."""
     if n_hashes > len(_MH_MIX):
         raise ValueError(f"n_hashes <= {len(_MH_MIX)}")
     n = int(shingle_n)
@@ -134,20 +133,6 @@ def minhash_signatures(docs: DataFrame, *, n_hashes: int = 8,
 
     return docs.select(id_col, text_col) \
         .mapInPandas(batches, f"{id_col} long, sig array<long>")
-
-
-def minhash_signatures_agg(docs: DataFrame, *, n_hashes: int = 8,
-                           shingle_n: int = 4) -> DataFrame:
-    """xxhash64 one-pass groupBy variant (round-2 fast path, kept for plan
-    comparison): n min-aggregates over seeded xxhash64, map-side partial
-    aggregation ⇒ shuffle one row per doc."""
-    sh = shingles(docs, n=shingle_n)
-    mins = [F.min(F.xxhash64(F.col("shingle"), F.lit(j))).alias(f"_h{j}")
-            for j in range(n_hashes)]
-    wide = sh.groupBy("doc_id").agg(*mins)
-    return wide.select(
-        "doc_id",
-        F.array(*[F.col(f"_h{j}") for j in range(n_hashes)]).alias("sig"))
 
 
 def minhash_lsh_pairs(docs: DataFrame, *, n_hashes: int = 8, band_rows: int = 2,

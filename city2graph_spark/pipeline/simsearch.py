@@ -224,49 +224,6 @@ def embedding_neardup_pairs(df: DataFrame, threshold: float, *,
             .applyInPandas(block_pairs, "doc_a long, doc_b long"))
 
 
-def cosine_topk_broadcast(probe: DataFrame, k: int, *,
-                          build: DataFrame | None = None,
-                          id_col: str = "vec_id",
-                          vec_col: str = "embedding") -> DataFrame:
-    """Broadcast-build variant of ``cosine_topk`` (the ANN equivalent of a
-    broadcast hash join): right when the index side fits in executor memory
-    — small dims probed by a huge table.  Build side is collected once and
-    broadcast; probes stream through mapInPandas in Arrow batches with one
-    float64 GEMM per batch.  The chunked ``cosine_topk`` is the default —
-    this is the explicitly-opt-in small-index fast path.
-    """
-    build = build if build is not None else probe
-    bids, bmat = _collect_matrix(build, id_col, vec_col)
-    bnorm = np.sqrt((bmat * bmat).sum(axis=1))
-    bnorm[bnorm == 0.0] = 1.0
-    spark = probe.sparkSession
-    bc = spark.sparkContext.broadcast((bids, bmat, bnorm))
-
-    def topk_batches(it):
-        import pandas as pd
-        ids_b, mat_b, norm_b = bc.value
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            qid = pdf[id_col].to_numpy().astype(np.int64)
-            Q = np.array(list(pdf[vec_col]), dtype=np.float64)
-            qn = np.sqrt((Q * Q).sum(axis=1))
-            qn[qn == 0.0] = 1.0
-            sims = (Q @ mat_b.T) / (qn[:, None] * norm_b[None, :])
-            sims[qid[:, None] == ids_b[None, :]] = -np.inf  # exclude self
-            kk = min(k, sims.shape[1] - 1)
-            if kk <= 0:
-                continue
-            top_i, top_s = _topk_rows(sims, ids_b, kk)
-            keep = np.isfinite(top_s)
-            rnk = np.broadcast_to(np.arange(1, kk + 1), top_i.shape)
-            qq = np.repeat(qid, kk).reshape(-1, kk)
-            yield pd.DataFrame({"qid": qq[keep], "nid": top_i[keep],
-                                "rnk": rnk[keep].astype(np.int64)})
-
-    return probe.mapInPandas(topk_batches, "qid long, nid long, rnk long")
-
-
 def ann_lsh_candidates(df: DataFrame, *, n_planes: int = 12, n_bands: int = 4,
                        seed: int = 42,
                        id_col: str = "vec_id", vec_col: str = "embedding",

@@ -97,6 +97,17 @@ def test_boruvka_matches_kruskal(uniform_df):
     assert abs(sum(r.weight for r in kr) - sum(r.weight for r in bo)) < 1e-6
 
 
+def test_boruvka_duplicate_edge_keeps_lighter(spark):
+    """A (u, v) pair given twice — heavier copy first — enters the forest
+    with its lighter weight, whatever order the rows arrive in."""
+    edges = spark.createDataFrame(
+        [(0, 1, 5.0), (1, 2, 2.0), (0, 1, 1.0), (0, 2, 3.0)],
+        "u long, v long, weight double").coalesce(1)
+    got = {(r.u, r.v): r.weight
+           for r in minimum_spanning_forest(edges).collect()}
+    assert got == {(0, 1): 1.0, (1, 2): 2.0}
+
+
 def test_emst_distributed_dispatch(gapped_df):
     df, pts = gapped_df
     # force the distributed path (delaunay tiles + Borůvka)

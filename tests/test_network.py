@@ -43,6 +43,49 @@ def test_bipartite_knn_exact(layers):
         assert got == want, f"cell={cell}"
 
 
+def test_bipartite_knn_negative_dst_ids(spark, layers):
+    """Candidate-less probes are flagged by an infinite weight, never by a
+    reserved id: a dst layer with negative ids (-1 included) stays exact on
+    the certified, retry and residual paths."""
+    df_a, _, a, b = layers
+    bid = -1 - np.arange(len(b))
+    df_b = spark.createDataFrame(
+        [(int(i), float(x), float(y)) for i, (x, y) in zip(bid, b)],
+        "node_id long, x double, y double")
+    d = np.sqrt(((a[:, None, :] - b[None, :, :]) ** 2).sum(-1))
+    want = {(i, int(bid[j])) for i in range(len(a))
+            for j in np.lexsort((bid, d[i]))[:3]}
+    for cell in (100.0, 2000.0, 20.0):
+        got = {(r.src, r.dst) for r in
+               knn_graph_bipartite(df_a, df_b, 3, cell_size=cell).collect()}
+        assert got == want, f"cell={cell}"
+
+
+def test_bipartite_knn_hot_block_salting(spark):
+    """The bipartite mode shares the self mode's skew guard: multi-salt
+    splits of a dense src/dst cluster leave the exact edge set unchanged."""
+    from city2graph_spark.operators.proximity import _knn_join
+    rng = np.random.default_rng(17)
+    src = np.vstack([rng.random((300, 2)) * 50.0 + 2000.0,
+                     rng.random((60, 2)) * 5000.0])
+    dst = np.vstack([rng.random((200, 2)) * 50.0 + 2000.0,
+                     rng.random((60, 2)) * 5000.0])
+    df_s, df_d = (spark.createDataFrame(
+        [(i, float(x), float(y)) for i, (x, y) in enumerate(p)],
+        "node_id long, x double, y double") for p in (src, dst))
+
+    def run(**kw):
+        return {(r.src, r.dst) for r in _knn_join(
+            df_s, df_d, 4, self_join=False, cell_size=500.0,
+            metric="euclidean", **kw).collect()}
+
+    base = run()
+    assert run(salt_target=50) == base
+    d = np.sqrt(((src[:, None, :] - dst[None, :, :]) ** 2).sum(-1))
+    assert base == {(i, int(j)) for i in range(len(src))
+                    for j in np.lexsort((np.arange(len(dst)), d[i]))[:4]}
+
+
 def test_bipartite_radius(layers):
     df_a, df_b, a, b = layers
     got = {(r.src, r.dst) for r in

@@ -46,26 +46,16 @@ def test_cosine_topk_never_collects_large_build(emb_df, monkeypatch):
     assert ss.cosine_topk(df, 3, rows_per_chunk=17).count() == 120 * 3
 
 
-def test_cosine_topk_small_build_dispatch_identical(emb_df):
+@pytest.mark.parametrize("k", [3, 5])
+def test_cosine_topk_small_build_dispatch_identical(emb_df, k):
     """The default call (build fits one chunk → broadcast mapInPandas fast
-    path, zero shuffles) must return exactly the chunked path's rows."""
+    path, zero shuffles) must return exactly the chunked path's rows (many
+    tiny chunks, rows_per_chunk=17 → multi-block merge)."""
     df, _ = emb_df
-    fast = {(r.qid, r.nid, r.rnk) for r in cosine_topk(df, 3).collect()}
+    fast = {(r.qid, r.nid, r.rnk) for r in cosine_topk(df, k).collect()}
     chunked = {(r.qid, r.nid, r.rnk)
-               for r in cosine_topk(df, 3, rows_per_chunk=17).collect()}
+               for r in cosine_topk(df, k, rows_per_chunk=17).collect()}
     assert fast == chunked
-
-
-def test_cosine_topk_chunked_equals_broadcast(emb_df):
-    """Many tiny chunks (rows_per_chunk=17 → multi-block merge) must give
-    the identical ranking as the broadcast small-index path."""
-    from city2graph_spark.pipeline.simsearch import cosine_topk_broadcast
-    df, _ = emb_df
-    a = {(r.qid, r.nid, r.rnk)
-         for r in cosine_topk(df, 5, rows_per_chunk=17).collect()}
-    b = {(r.qid, r.nid, r.rnk)
-         for r in cosine_topk_broadcast(df, 5).collect()}
-    assert a == b
 
 
 def test_lsh_candidates_deterministic_and_relevant(emb_df):
