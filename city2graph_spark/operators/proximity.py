@@ -824,7 +824,7 @@ def waxman_graph(points: DataFrame, beta: float, r0: float, seed: int, *,
 
 
 def delaunay_graph(points: DataFrame, *, driver_switch: int = 20_000,
-                   tile_points: int = 2500, max_rounds: int = 6,
+                   tile_points: int = 2500,
                    duplicate_edges: bool = False) -> DataFrame:
     """Delaunay triangulation edges (reference proximity.py:890-982: all
     2-combinations of every simplex, deduped).
@@ -836,8 +836,7 @@ def delaunay_graph(points: DataFrame, *, driver_switch: int = 20_000,
     is gone.
     """
     n = points.count()
-    out = (delaunay_graph_distributed(points, tile_points=tile_points,
-                                      max_rounds=max_rounds)
+    out = (delaunay_graph_distributed(points, tile_points=tile_points)
            if n > driver_switch else _delaunay_driver(points))
     return _apply_duplicate_edges(out, duplicate_edges, src="u", dst="v")
 
@@ -893,9 +892,7 @@ def _global_hull(points: DataFrame) -> list[tuple[int, float, float]]:
 
 
 def delaunay_graph_distributed(points: DataFrame, *, tile_points: int = 2500,
-                               max_rounds: int = 6,
-                               boundary_cap: int | None = None,
-                               debug: bool = False) -> DataFrame:
+                               boundary_cap: int | None = None) -> DataFrame:
     """Exact distributed Delaunay in ONE data pass + one boundary pass
     (SURVEY §7.3, redesigned after the round-2 escalation experiments).
 
@@ -921,8 +918,10 @@ def delaunay_graph_distributed(points: DataFrame, *, tile_points: int = 2500,
     Scale shape: one applyInPandas over tiles (~``tile_points`` gathered
     points each, 9× ring-explode shuffle), two cell-cover verify joins, no
     full gather anywhere; U and the per-tile hull chains are the only
-    driver-side artifacts.  (``max_rounds`` retained for API compatibility;
-    the pass structure is fixed.)
+    driver-side artifacts.  ``res``, ``U`` and the triangle set are
+    local-checkpointed: each cuts the lineage, so the plan of the returned
+    edges stays small enough for Spark to print when a consumer (e.g.
+    Borůvka) checkpoints it.
     """
     import math
 
@@ -1037,7 +1036,7 @@ def delaunay_graph_distributed(points: DataFrame, *, tile_points: int = 2500,
         .withColumn("_in_t", F.col("cell") == F.col("tile")) \
         .join(occupied, "tile", "left_semi")
     res = gathered.select("tile", "node_id", "x", "y", "_in_t") \
-        .groupBy("tile").applyInPandas(tile_udf, out_schema).persist()
+        .groupBy("tile").applyInPandas(tile_udf, out_schema).localCheckpoint()
 
     def verify_invaded(tri_df):
         """Distributed in-circle invader join: triangles (ta,tb,tc,ccx,ccy,
@@ -1072,7 +1071,7 @@ def delaunay_graph_distributed(points: DataFrame, *, tile_points: int = 2500,
     u_ref = invaded.select(F.col("ta").alias("pid")) \
         .unionByName(invaded.select(F.col("tb").alias("pid"))) \
         .unionByName(invaded.select(F.col("tc").alias("pid")))
-    U = u_pts.unionByName(u_ref).dropDuplicates().persist()
+    U = u_pts.unionByName(u_ref).dropDuplicates().localCheckpoint()
     n_u = U.count()
     # guard the driver-side DT(U): for realistic data |U| = O(√n) (measured
     # in ARCHITECTURE.md), but adversarial inputs (all points cocircular /
@@ -1086,10 +1085,6 @@ def delaunay_graph_distributed(points: DataFrame, *, tile_points: int = 2500,
             f"(n={n}): input is adversarially degenerate (cocircular/"
             f"collinear); raise boundary_cap explicitly to force the "
             f"driver-side boundary pass")
-    if debug:
-        print(f"[delaunay] unproven={unproven.count()} "
-              f"refuted={invaded.count()} unsettled={n_u}", flush=True)
-
     # anchored triangles whose anchor stayed settled
     anchored = (res.where(F.col("kind") == 0)
                 .join(U.withColumnRenamed("pid", "anchor"),
@@ -1130,8 +1125,9 @@ def delaunay_graph_distributed(points: DataFrame, *, tile_points: int = 2500,
         # n_u == 2: the pair's edge is global iff it survives everywhere —
         # covered by the anchored fans of settled neighbors; skip
 
-    tris_all = anchored if extra is None else \
-        anchored.unionByName(extra).dropDuplicates(["ta", "tb", "tc"])
+    tris_all = (anchored if extra is None else
+                anchored.unionByName(extra)
+                .dropDuplicates(["ta", "tb", "tc"])).localCheckpoint()
     e = (tris_all.select(F.col("ta").alias("u"), F.col("tb").alias("v"))
          .unionByName(tris_all.select(F.col("ta").alias("u"),
                                       F.col("tc").alias("v")))

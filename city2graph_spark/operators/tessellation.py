@@ -834,17 +834,38 @@ def _tessellate_one_enclosure(ering: np.ndarray, pdf, segment: float,
     return None
 
 
+def _ring_list(pdf) -> list[np.ndarray]:
+    """One polygon's vertex rows (ring, seq, x, y) as its ring arrays,
+    ring 0 first."""
+    return [grp.sort_values("seq")[["x", "y"]].to_numpy()
+            for _, grp in pdf.groupby("ring", sort=True)]
+
+
+def _enclosure_rings_df(spark, encl: list) -> DataFrame:
+    """A driver enclosure list — [(eid, ring)] from :func:`build_enclosures`
+    or [(eid, [exterior, hole, …])] from :func:`build_enclosures_limited` —
+    as the (eid, ring, seq, x, y) ring table that
+    :func:`.enclosures.enclosures_union_distributed` returns."""
+    rows = [(eid, ri, i, float(x), float(y))
+            for eid, r in encl
+            for ri, ring in enumerate(r if isinstance(r, list) else [r])
+            for i, (x, y) in enumerate(ring)]
+    return spark.createDataFrame(
+        rows, "eid long, ring long, seq long, x double, y double")
+
+
 def _tessellate_from_encl_df(building_verts: DataFrame, encl_df: DataFrame,
                              *, segment: float, shrink: float,
                              keep_empty: bool) -> DataFrame:
-    """DataFrame-native downstream of :func:`enclosed_tessellation` for an
-    enclosure RING TABLE (eid, ring, seq, x, y) instead of a driver ring
-    list: per-eid areas via ``applyInPandas``, building assignment via the
-    same ``group_nodes`` cell-join + smallest-area window, and the
-    per-enclosure Voronoi as a COGROUP of building verts with enclosure
-    rings on eid — no enclosure broadcast, no driver gather anywhere.
-    Empty enclosures fall out of the cogroup naturally (building side
-    empty ⇒ place_id −1 rows when ``keep_empty``)."""
+    """Downstream of :func:`enclosed_tessellation` for an enclosure ring
+    table (eid, ring, seq, x, y), whichever build produced it: per-eid
+    areas via ``applyInPandas``, building assignment via the
+    ``group_nodes`` cell-join + smallest-area window, and the per-enclosure
+    Voronoi as ONE ``groupBy(eid).applyInPandas`` over building vertices
+    unioned with the enclosure's ring rows (``_enc`` marks the ring rows) —
+    no broadcast, no driver gather.  An enclosure whose group holds only
+    ring rows contains no building (place_id −1 rows when
+    ``keep_empty``)."""
     from pyspark.sql import Window
 
     from .polygons import group_nodes, polygon_centroids
@@ -852,17 +873,18 @@ def _tessellate_from_encl_df(building_verts: DataFrame, encl_df: DataFrame,
 
     def area_fn(key, pdf):
         import pandas as pd
-
-        from ..geo.kernels import rings_net_area
-        rl = [grp.sort_values("seq")[["x", "y"]].to_numpy()
-              for _, grp in pdf.groupby("ring", sort=True)]
         return pd.DataFrame({"eid": [int(key[0])],
-                             "_area": [rings_net_area(rl)]})
+                             "_area": [_rings_area(_ring_list(pdf))]})
 
     areas_df = encl_df.groupBy("eid").applyInPandas(
         area_fn, "eid long, _area double")
     faces_df = encl_df.select(F.col("eid").alias("poly_id"),
                               "ring", "seq", "x", "y")
+    # assign each building to the smallest containing face (smallest-area
+    # rule resolves nested faces — barrier islands come out as nested
+    # rings) via the group_nodes cell-join plan — no per-face Python loop,
+    # so a metro's ~10⁵ enclosures join instead of iterating inside every
+    # Arrow batch
     cents = polygon_centroids(building_verts)
     pts = cents.select(F.col("poly_id").alias("node_id"),
                        F.col("cx").alias("x"), F.col("cy").alias("y"))
@@ -873,56 +895,52 @@ def _tessellate_from_encl_df(building_verts: DataFrame, encl_df: DataFrame,
             .withColumn("_rn", F.row_number().over(wn))
             .where(F.col("_rn") == 1)
             .select(F.col("node_id").alias("poly_id"), "eid"))
-    # localCheckpoint before the cogroup: Spark 4.1 cogroup-applyInPandas
-    # mis-groups when a side's lineage contains a generator (explode) —
-    # whole inputs can land in ONE group (round-1 finding; building
-    # tables are routinely explode-synthesized)
     verts = building_verts \
         .select("poly_id", "ring", "seq", "x", "y").join(eids, "poly_id") \
-        .localCheckpoint()
+        .withColumn("_enc", F.lit(False))
+    # ring rows carry a filler poly_id of 0, not null: a null column
+    # reaches pandas as float64, which loses building ids above 2**53
+    rings = encl_df.select("eid", F.lit(0).cast("long").alias("poly_id"),
+                           "ring", "seq", "x", "y", F.lit(True).alias("_enc"))
     seg_len, shr, ke = float(segment), float(shrink), bool(keep_empty)
+    cols = ["enclosure_index", "place_id", "ring", "seq", "x", "y"]
 
-    def tess2(key, bpdf, epdf):
+    def tess(key, pdf):
         import pandas as pd
         eid = int(key[0])
-        cols = ["enclosure_index", "place_id", "ring", "seq", "x", "y"]
-        if len(epdf) == 0:
-            return pd.DataFrame(columns=cols)
-        rl = [grp.sort_values("seq")[["x", "y"]].to_numpy()
-              for _, grp in epdf.groupby("ring", sort=True)]
+        enc = pdf["_enc"].to_numpy(bool)
+        rl = _ring_list(pdf[enc])
+        bpdf = pdf[~enc]
         if len(bpdf) == 0:
-            if not ke:
-                return pd.DataFrame(columns=cols)
-            rows = [(eid, -1, ri, i, float(x), float(y))
-                    for ri, ring in enumerate(rl)
-                    for i, (x, y) in enumerate(ring)]
-            return pd.DataFrame(rows, columns=cols)
-        cells = _tessellate_one_enclosure(rl[0], bpdf, seg_len, shr,
-                                          holes=rl[1:])
+            # no building inside: the whole enclosure is one empty cell
+            cells = [(-1, rl)] if ke else []
+        else:
+            cells = _tessellate_one_enclosure(rl[0], bpdf, seg_len, shr,
+                                              holes=rl[1:])
         if cells is None:
+            # retry ladder exhausted: the enclosure's partition stays
+            # degenerate, so its buildings degrade to footprint fallback
+            # cells (reference spatial.py:2657-2668 drops the enclosure's
+            # cells; M14 then gives each building its own footprint)
             fb = bpdf.sort_values(["poly_id", "ring", "seq"]).copy()
             fb.insert(0, "enclosure_index", eid)
             return fb.rename(columns={"poly_id": "place_id"})[cols]
-        rows = []
-        for pid, rlist in cells:
-            for ri, ring in enumerate(rlist):
-                for i, (x, y) in enumerate(ring):
-                    rows.append((eid, pid, ri, i, float(x), float(y)))
+        rows = [(eid, pid, ri, i, float(x), float(y))
+                for pid, rlist in cells
+                for ri, ring in enumerate(rlist)
+                for i, (x, y) in enumerate(ring)]
         return pd.DataFrame(rows, columns=cols)
 
     schema = ("enclosure_index long, place_id long, ring long, seq long, "
               "x double, y double")
-    return (verts.groupBy("eid")
-            .cogroup(encl_df.groupBy("eid"))
-            .applyInPandas(tess2, schema))
+    return (verts.unionByName(rings)
+            .groupBy("eid").applyInPandas(tess, schema))
 
 
 def enclosed_tessellation(building_verts: DataFrame, barriers_mv: DataFrame, *,
                           segment: float = 0.5, shrink: float = 0.4,
                           buffer: float = 100.0,
                           limit: tuple[float, float, float, float] | None = None,
-                          limit_mode: str = "union",
-                          union_mode: str = "auto",
                           union_driver_cap: int = 20_000,
                           arc_segments: int = 0,
                           keep_empty: bool = True) -> DataFrame:
@@ -931,59 +949,48 @@ def enclosed_tessellation(building_verts: DataFrame, barriers_mv: DataFrame, *,
     arrangement into enclosure faces, then Voronoi-partition each enclosure
     among the buildings inside it.
 
-    Distribution: enclosures come from the street-scale barrier table
-    (driver polygonization, broadcast rings); buildings are assigned to
-    their smallest containing face by a vectorized PIP pass, and the
-    per-enclosure Voronoi runs as ``groupBy(eid).applyInPandas`` — the
-    natural partition key, since enclosures tile the city and each is
-    independent.  With an explicit ``limit`` or ``limit_mode="rect"`` the
-    building table never gathers anywhere at any scale.  The DEFAULT
-    (``limit_mode="union"``, no ``limit``) derives the reference's
-    buffered-union limit: below ``union_driver_cap`` pre-merged building
-    runs the arrangement is a DRIVER pass over the gathered runs (fast,
-    bit-stable, momepy-like); past the cap ``union_mode="auto"`` switches
-    to the tiled DISTRIBUTED build (:mod:`.enclosures` — per-tile
+    Enclosures: with an explicit ``limit`` the barrier arrangement is
+    polygonized at the driver (street-scale, :func:`build_enclosures`).
+    With no limit the enclosure boundary is the reference's buffered-UNION
+    limit (spatial.py:2922-2962: per-building / per-barrier ``buffer``
+    buffers unioned, so the limit follows the built fabric and street-front
+    cells never stretch into empty land; see :func:`buffered_union_shapes`
+    for the mitered-rectangle approximation).  Buildings are first
+    pre-merged into aligned runs; up to ``union_driver_cap`` runs the
+    arrangement is a DRIVER pass over runs ∪ barriers
+    (:func:`build_enclosures_limited` — fast, bit-stable, momepy-like),
+    past it the tiled DISTRIBUTED build (:mod:`.enclosures` — per-tile
     arrangements, border-key stitching, label-propagation components; no
-    driver gather of building-scale data on the success path), and the
-    whole downstream (areas, assignment, per-enclosure Voronoi, empty
-    enclosures) runs DataFrame-native.  ``union_mode="driver"`` restores
-    the round-5 behavior (raise past the cap); ``union_mode="distributed"``
-    forces the tiled path at any size.  Note "union" became the default in
-    round 5 ("rect" before — see README).
+    driver gather of building-scale data).  ``union_driver_cap=0`` forces
+    the tiled build at any size.
+
+    Downstream: every build yields one (eid, ring, seq, x, y) ring table,
+    and :func:`_tessellate_from_encl_df` assigns each building to its
+    smallest containing enclosure by a cell-join PIP pass and runs the
+    per-enclosure Voronoi as ``groupBy(eid).applyInPandas`` — the natural
+    partition key, since enclosures tile the city and each is independent.
 
     ``barriers_mv``: movement polyline vertex table (movement_id, seq, x, y).
-    ``limit``: (xmin, ymin, xmax, ymax) enclosure boundary; an explicit
-    ``limit`` wins over either mode.  With no limit the DEFAULT is the
-    reference's buffered-UNION limit (``limit_mode="union"``, round 5 —
-    the reference derives it whenever no explicit limit is given,
-    spatial.py:2922-2962: per-building / per-barrier 100 m buffers unioned,
-    so the limit follows the built fabric and street-front cells never
-    stretch into empty land; see :func:`buffered_union_shapes` for the
-    mitered-rectangle approximation).  ``limit_mode="rect"`` selects the
-    legacy buffered-bbox rectangle.
+    ``limit``: (xmin, ymin, xmax, ymax) enclosure boundary.
 
     Returns a polygon vertex table (enclosure_index, place_id, ring, seq,
     x, y); ``place_id`` is the owning building's poly_id, or -1 for an
     enclosure containing no buildings (kept as its own cell when
     ``keep_empty``, matching momepy)."""
     from .morphology import polyline_parts
-    from .polygons import polygon_centroids
     spark = building_verts.sparkSession
     parts = polyline_parts(barriers_mv).select("ax", "ay", "bx", "by").collect()
     segs = np.array([[r["ax"], r["ay"], r["bx"], r["by"]] for r in parts]) \
         if parts else np.empty((0, 4))
-    if limit is None and limit_mode == "union":
-        # DISTRIBUTED exact pre-merge before the driver gather (round 5):
+    if limit is not None:
+        encl_df = _enclosure_rings_df(spark, build_enclosures(segs, limit))
+    else:
+        # DISTRIBUTED exact pre-merge before any enclosure build (round 5):
         # buffered building rects sharing the SAME y-extent whose buffered
         # x-intervals overlap union into one rectangle — a window cummax
         # interval merge per (y0, y1) group, the classic shape of rowed
         # housing data (and of real city blocks), collapsing n buildings
         # to the number of aligned runs with the union region UNCHANGED.
-        # Below the cap the remaining arrangement is a DRIVER pass over
-        # runs ∪ barriers (like momepy's in-process enclosures); past it
-        # union_mode="auto" switches to the tiled distributed build
-        # (operators/enclosures.py) — metro scale no longer needs a
-        # fallback mode.
         from pyspark.sql import Window
         b = float(buffer)
         bb = (building_verts.where(F.col("ring") == 0).groupBy("poly_id")
@@ -1004,129 +1011,29 @@ def enclosed_tessellation(building_verts: DataFrame, barriers_mv: DataFrame, *,
                   .withColumn("_grp", F.sum(F.col("_new").cast("int")).over(w))
                   .groupBy("by0", "by1", "_grp")
                   .agg(F.min("bx0").alias("bx0"), F.max("bx1").alias("bx1")))
-        n_runs = merged.count()
-        if union_mode == "distributed" or (union_mode == "auto"
-                                           and n_runs > union_driver_cap):
+        caps = buffered_union_shapes(np.empty((0, 4)), segs, buffer,
+                                     arc_segments)
+        if merged.count() > union_driver_cap:
             from .enclosures import enclosures_union_distributed
-            caps = buffered_union_shapes(np.empty((0, 4)), segs, buffer,
-                                         arc_segments)
             encl_df = enclosures_union_distributed(
                 merged.select("bx0", "by0", "bx1", "by1"), caps, segs,
                 buffer=b, arc_segments=arc_segments)
-            return _tessellate_from_encl_df(
-                building_verts, encl_df, segment=segment, shrink=shrink,
-                keep_empty=keep_empty)
-        if n_runs > union_driver_cap:
-            raise ValueError(
-                f"buffered-union enclosure limit gathers {n_runs} merged "
-                f"building runs at the driver (> union_driver_cap="
-                f"{union_driver_cap}); pass an explicit limit, "
-                f"limit_mode='rect', union_mode='auto'/'distributed', "
-                f"or raise the cap")
-        runs = merged.collect()
-        if arc_segments > 0:
-            # merged runs are buffered intervals — undo the dilation so
-            # the rounded rect re-applies it with corner arcs
-            shapes = [arc_rounded_rect(r["bx0"] + b, r["by0"] + b,
-                                       r["bx1"] - b, r["by1"] - b,
-                                       b, arc_segments) for r in runs]
         else:
-            shapes = [np.array([[r["bx0"], r["by0"]], [r["bx1"], r["by0"]],
-                                [r["bx1"], r["by1"]], [r["bx0"], r["by1"]]])
-                      for r in runs]
-        shapes += buffered_union_shapes(np.empty((0, 4)), segs, buffer,
-                                        arc_segments)
-        encl = build_enclosures_limited(segs, shapes)
-    else:
-        if limit is None:
-            bb = building_verts.agg(F.min("x"), F.min("y"),
-                                    F.max("x"), F.max("y")).head()
-            xs = [bb[0], bb[2]] + ([segs[:, [0, 2]].min(),
-                                    segs[:, [0, 2]].max()]
-                                   if len(segs) else [])
-            ys = [bb[1], bb[3]] + ([segs[:, [1, 3]].min(),
-                                    segs[:, [1, 3]].max()]
-                                   if len(segs) else [])
-            limit = (float(min(xs)) - buffer, float(min(ys)) - buffer,
-                     float(max(xs)) + buffer, float(max(ys)) + buffer)
-        encl = build_enclosures(segs, limit)
-
-    # assign each building to the smallest containing face (smallest-area
-    # rule resolves nested faces — barrier islands come out as nested
-    # rings) via the group_nodes cell-join plan: face bboxes explode to
-    # cells, equi-join with cell-bucketed centroids, PIP refine, window
-    # tiebreak — no per-face Python loop, so a metro's ~10⁵ enclosures
-    # join instead of iterating inside every Arrow batch
-    from pyspark.sql import Window
-
-    from .polygons import group_nodes
-    # normalize both modes to (eid, [exterior, hole, ...]) ring lists
-    encl = [(eid, r if isinstance(r, list) else [r]) for eid, r in encl]
-    face_rows, area_rows = [], []
-    for eid, rlist in encl:
-        area_rows.append((eid, _rings_area(rlist)))
-        for ri, ring in enumerate(rlist):
-            for i in range(len(ring)):
-                face_rows.append((eid, ri, i, float(ring[i, 0]),
-                                  float(ring[i, 1])))
-    faces_df = spark.createDataFrame(
-        face_rows, "poly_id long, ring long, seq long, x double, y double")
-    areas_df = spark.createDataFrame(area_rows, "eid long, _area double")
-    cents = polygon_centroids(building_verts)
-    pts = cents.select(F.col("poly_id").alias("node_id"),
-                       F.col("cx").alias("x"), F.col("cy").alias("y"))
-    hits = group_nodes(faces_df, pts).withColumnRenamed("poly_id", "eid")
-    wn = Window.partitionBy("node_id").orderBy(F.col("_area").asc(),
-                                               F.col("eid").asc())
-    eids = (hits.join(F.broadcast(areas_df), "eid")
-            .withColumn("_rn", F.row_number().over(wn))
-            .where(F.col("_rn") == 1)
-            .select(F.col("node_id").alias("poly_id"), "eid")
-            .localCheckpoint())   # consumed by the verts join AND keep_empty
-    verts = building_verts \
-        .select("poly_id", "ring", "seq", "x", "y").join(eids, "poly_id")
-
-    ring_map_b = spark.sparkContext.broadcast({eid: rl for eid, rl in encl})
-    seg_len, shr = float(segment), float(shrink)
-
-    def tess(key, pdf):
-        import pandas as pd
-        eid = int(key[0])
-        rl = ring_map_b.value[eid]
-        cells = _tessellate_one_enclosure(rl[0], pdf, seg_len, shr,
-                                          holes=rl[1:])
-        if cells is None:
-            # retry ladder exhausted: the enclosure's partition stays
-            # degenerate, so its buildings degrade to footprint fallback
-            # cells (reference spatial.py:2657-2668 drops the enclosure's
-            # cells; M14 then gives each building its own footprint)
-            fb = pdf.sort_values(["poly_id", "ring", "seq"]).copy()
-            fb.insert(0, "enclosure_index", eid)
-            return fb.rename(columns={"poly_id": "place_id"})[
-                ["enclosure_index", "place_id", "ring", "seq", "x", "y"]]
-        rows = []
-        for pid, rlist in cells:
-            for ri, ring in enumerate(rlist):
-                for i, (x, y) in enumerate(ring):
-                    rows.append((eid, pid, ri, i, float(x), float(y)))
-        return pd.DataFrame(rows, columns=["enclosure_index", "place_id",
-                                           "ring", "seq", "x", "y"])
-
-    schema = ("enclosure_index long, place_id long, ring long, seq long, "
-              "x double, y double")
-    out = verts.groupBy("eid").applyInPandas(tess, schema)
-    if keep_empty:
-        used = {r["eid"] for r in eids.select("eid").dropDuplicates().collect()}
-        empty_rows = []
-        for eid, rlist in encl:
-            if eid in used:
-                continue
-            for ri, ring in enumerate(rlist):
-                for i, (x, y) in enumerate(ring):
-                    empty_rows.append((eid, -1, ri, i, float(x), float(y)))
-        if empty_rows:
-            out = out.unionByName(spark.createDataFrame(empty_rows, schema))
-    return out
+            runs = merged.collect()
+            if arc_segments > 0:
+                # merged runs are buffered intervals — undo the dilation
+                # so the rounded rect re-applies it with corner arcs
+                shapes = [arc_rounded_rect(r["bx0"] + b, r["by0"] + b,
+                                           r["bx1"] - b, r["by1"] - b,
+                                           b, arc_segments) for r in runs]
+            else:
+                shapes = [np.array([[r["bx0"], r["by0"]], [r["bx1"], r["by0"]],
+                                    [r["bx1"], r["by1"]], [r["bx0"], r["by1"]]])
+                          for r in runs]
+            encl_df = _enclosure_rings_df(
+                spark, build_enclosures_limited(segs, shapes + caps))
+    return _tessellate_from_encl_df(building_verts, encl_df, segment=segment,
+                                    shrink=shrink, keep_empty=keep_empty)
 
 
 def create_tessellation(building_verts: DataFrame,
@@ -1134,18 +1041,16 @@ def create_tessellation(building_verts: DataFrame,
                         segment: float = 0.5,
                         shrink: float = 0.4,
                         buffer: float = 100.0,
-                        limit: tuple[float, float, float, float] | None = None,
-                        limit_mode: str = "union") -> DataFrame:
+                        limit: tuple[float, float, float, float] | None = None
+                        ) -> DataFrame:
     """M5 entry point (spatial.py:2085-2197): barriers given → enclosed
     tessellation (the reference's default urban path); no barriers →
     morphological tessellation with bounding-box clip, tess_id = building
-    index.  With no explicit ``limit`` the default is the reference's
-    buffered-union enclosure limit (spatial.py:2922-2962);
-    ``limit_mode="rect"`` selects the legacy buffered-bbox rectangle."""
+    index.  With no explicit ``limit`` the enclosure limit is the
+    reference's buffered union (spatial.py:2922-2962)."""
     if primary_barriers is not None:
         return enclosed_tessellation(building_verts, primary_barriers,
                                      segment=segment, shrink=shrink,
-                                     buffer=buffer, limit=limit,
-                                     limit_mode=limit_mode)
+                                     buffer=buffer, limit=limit)
     return morphological_tessellation(building_verts, segment=segment,
                                       shrink=shrink, buffer=buffer)

@@ -275,3 +275,75 @@ def test_courtyard_hole_preserved(spark):
     vx, vy = ring1["x"].to_numpy(), ring1["y"].to_numpy()
     got = points_covered_by_ring(np.array([10.0]), np.array([10.0]), vx, vy)
     assert got[0]
+
+
+def _exploded_buildings(spark):
+    """16 10 m squares, four per grid block, synthesized JVM-side through
+    ``F.explode`` — the generator lineage real building tables have."""
+    corners = [(-5.0, -5.0), (5.0, -5.0), (5.0, 5.0), (-5.0, 5.0),
+               (-5.0, -5.0)]
+    ring = F.array(*[F.struct(F.lit(s).alias("seq"),
+                              (F.col("cx") + dx).alias("x"),
+                              (F.col("cy") + dy).alias("y"))
+                     for s, (dx, dy) in enumerate(corners)])
+    pos = F.array(*[F.lit(v) for v in (25.0, 63.0, 131.0, 172.0)])
+    return (spark.range(16)
+            .withColumn("cx", pos[(F.col("id") % 4).cast("int")])
+            .withColumn("cy", pos[(F.col("id") / 4).cast("int")]
+                        + (F.col("id") % 3).cast("double"))
+            .select(F.col("id").alias("poly_id"), F.explode(ring).alias("c"))
+            .select("poly_id", F.lit(0).cast("long").alias("ring"),
+                    F.col("c.seq").cast("long").alias("seq"), "c.x", "c.y"))
+
+
+def _net_areas(pdf):
+    from city2graph_spark.geo.kernels import rings_net_area
+    out = {}
+    for key, grp in pdf.groupby(["enclosure_index", "place_id"]):
+        out[key] = rings_net_area(
+            [g.sort_values("seq")[["x", "y"]].to_numpy()
+             for _, g in grp.groupby("ring", sort=True)])
+    return out
+
+
+@pytest.mark.parametrize("case", ["empty_buildings", "exploded_buildings"])
+def test_enclosed_adversarial_inputs(spark, mv, case):
+    """An empty building table under an explicit limit yields every
+    enclosure once as an empty (-1) cell, or nothing without keep_empty.
+    Buildings built through a generator (explode) give every building one
+    cell that contains its footprint, in both the driver enclosure build
+    and the tiled one (union_driver_cap=0)."""
+    if case == "empty_buildings":
+        bv = spark.createDataFrame(
+            [], "poly_id long, ring long, seq long, x double, y double")
+        lim = (0.0, 0.0, 200.0, 200.0)
+        areas = _net_areas(enclosed_tessellation(
+            bv, mv, segment=2.0, limit=lim).toPandas())
+        assert sorted(areas) == [(e, -1) for e in range(4)]
+        assert all(abs(a - 10000.0) < 1e-6 for a in areas.values())
+        assert enclosed_tessellation(bv, mv, segment=2.0, limit=lim,
+                                     keep_empty=False).count() == 0
+        return
+    bv = _exploded_buildings(spark)
+    centers = {r["poly_id"]: (r["cx"], r["cy"]) for r in
+               bv.groupBy("poly_id").agg(F.avg("x").alias("cx"),
+                                         F.avg("y").alias("cy")).collect()}
+    by_build = []
+    for cap in (20_000, 0):
+        pdf = enclosed_tessellation(bv, mv, segment=2.0,
+                                    union_driver_cap=cap).toPandas()
+        owned = pdf[pdf["place_id"] >= 0]
+        assert set(owned["place_id"]) == set(range(16)), cap
+        assert (owned.groupby("place_id")["enclosure_index"].nunique()
+                == 1).all(), cap
+        for pid, (cx, cy) in centers.items():
+            cell = owned[owned["place_id"] == pid]
+            inside = False
+            for _, g in cell.groupby("ring"):
+                g = g.sort_values("seq")
+                inside ^= bool(points_covered_by_ring(
+                    np.array([cx]), np.array([cy]),
+                    g["x"].to_numpy(), g["y"].to_numpy())[0])
+            assert inside, (cap, pid)
+        by_build.append(sorted(round(a, 2) for a in _net_areas(pdf).values()))
+    assert by_build[0] == pytest.approx(by_build[1], abs=0.05)

@@ -156,8 +156,9 @@ def _mk_mv(spark, segs):
 
 
 def test_end_to_end_distributed_matches_driver(spark):
-    """Full enclosed_tessellation: union_mode='distributed' must produce
-    the same cell multiset (per-place areas) as the driver union path.
+    """Full enclosed_tessellation: the tiled build (union_driver_cap=0)
+    must produce the same cell multiset (per-place areas) as the driver
+    union build.
 
     The street network is a connected grid (ring + cross, every vertex
     degree ≥ 2): dead-end street arms are dangle-pruned into in-enclosure
@@ -196,10 +197,9 @@ def test_end_to_end_distributed_matches_driver(spark):
             out[pid].append(round(abs(rings_net_area(rl)), 2))
         return {pid: sorted(v) for pid, v in out.items()}
 
-    drv = cells_key(enclosed_tessellation(bv, mv, buffer=25.0,
-                                          union_mode="driver"))
+    drv = cells_key(enclosed_tessellation(bv, mv, buffer=25.0))
     dst = cells_key(enclosed_tessellation(bv, mv, buffer=25.0,
-                                          union_mode="distributed"))
+                                          union_driver_cap=0))
     # per-place cell areas must agree; empty enclosures (pid −1) compared
     # as a multiset too
     assert set(drv) == set(dst)

@@ -218,8 +218,10 @@ def test_buffered_union_limit_vs_rectangle(spark):
             out[key] = out.get(key, 0.0) + (abs(a) if ring == 0 else -abs(a))
         return out
 
+    # the buffered bounding box of buildings and barriers as an explicit
+    # rectangle limit
     rect = areas(enclosed_tessellation(bv, mv, buffer=50.0,
-                                       limit_mode="rect"))
+                                       limit=(-50.0, -50.0, 1060.0, 1060.0)))
     # round 5: with no explicit limit the DEFAULT is the buffered-union
     # limit (reference default, spatial.py:2922-2962)
     union = areas(enclosed_tessellation(bv, mv, buffer=50.0))
@@ -346,18 +348,14 @@ def test_grid_snap_rung_boundary_hugging(monkeypatch):
 
 
 def test_union_driver_cap_loud(spark, grid_buildings):
-    """union_mode='driver' must refuse loudly past its driver cap (counted
-    in MERGED aligned runs, round 5) instead of degrading into a quadratic
-    driver arrangement; the round-6 default ('auto') switches to the tiled
-    distributed build instead of raising (tests/test_enclosures_dist.py)."""
+    """Past ``union_driver_cap`` (counted in MERGED aligned runs) the
+    enclosure build switches to the tiled distributed build instead of
+    degrading into a quadratic driver arrangement
+    (tests/test_enclosures_dist.py checks it against the driver build)."""
     from city2graph_spark.operators.tessellation import enclosed_tessellation
     mv = spark.createDataFrame(
         [(0, 0, -100.0, -100.0), (0, 1, 400.0, -100.0)],
         "movement_id long, seq long, x double, y double")
-    with pytest.raises(ValueError, match="union_driver_cap"):
-        enclosed_tessellation(grid_buildings, mv, union_driver_cap=2,
-                              union_mode="driver")
-    # auto past the cap: no raise — the distributed path takes over
     out = enclosed_tessellation(grid_buildings, mv, union_driver_cap=2)
     assert out.count() > 0
 
@@ -441,7 +439,7 @@ def test_round_buffer_parity(spark):
     assert abs(sum(drv.values()) - arc_area) < arc_area * 0.02
 
     dst = areas(enclosed_tessellation(bv, mv, buffer=b, arc_segments=8,
-                                      union_mode="distributed"))
+                                      union_driver_cap=0))
     a_d = sorted(round(v, 2) for v in drv.values())
     a_t = sorted(round(v, 2) for v in dst.values())
     assert a_d == pytest.approx(a_t, abs=0.5)
